@@ -877,23 +877,6 @@ def _sq8_max_abs(a):
     )
 
 
-def _sq8_dot(q, c, m):
-    """Left-folded Σ q_i · floor(c_i·127/m + 0.5) in double — the ADC
-    inner product against int8 codes, codes decoded inline (the oracle
-    unrolls the identical expression, so no codes column needs to ship).
-    floor() is exact on identical doubles in both engines — unlike
-    round(), it carries no half-tie semantics at all."""
-    import functools as _ft
-
-    def term(i: int):
-        qi = F.element_at(q, i + 1).cast("double")
-        ci = F.element_at(c, i + 1).cast("double")
-        code = F.floor(ci * F.lit(127.0) / m + F.lit(0.5)).cast("double")
-        return qi * code
-
-    return _ft.reduce(lambda x, y: x + y, (term(i) for i in range(DIM)))
-
-
 def q_sq8_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-quantization (SQ8) ANN tier — the third compression point
     next to PQ (64×) and raw floats: each vector is encoded as 64 int8
@@ -914,37 +897,11 @@ def q_sq8_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: codes come from floor(x·127/m + 0.5) — floor on
     identical doubles has no rounding semantics to diverge (unlike
-    round's half-ties); folds are the module's standard unrolled
-    left-fold; ties break on neighbor_id."""
-    from .similarity import _emb_count
-
+    round's half-ties); both scores are left folds in the oracle's op
+    order, computed in one Arrow pass (``_sq8_pairs_fold_exact``); ties
+    break on neighbor_id."""
     emb = load_table(spark, sf_dir, "embeddings")
-    if _emb_count(emb, sf_dir) > SQ8_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin of the pair stage (r19 optimization):
-        # same pair set, bitwise-same sq8/exact scores — see
-        # _sq8_pairs_fold_exact; the oracle smoke SFs keep the unrolled
-        # Catalyst form below the threshold
-        scored = _sq8_pairs_fold_exact(spark, emb)
-    else:
-        queries = F.broadcast(
-            emb.filter(F.col("vec_id") < N_QUERIES).select(
-                F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-            )
-        )
-        corpus = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv"),
-            _sq8_max_abs(F.col("embedding")).alias("m"),
-        )
-        scored = corpus.join(queries, F.col("query_id") != F.col("neighbor_id")).select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                (F.col("m") / F.lit(127.0)) * _sq8_dot(F.col("qv"), F.col("cv"), F.col("m")),
-                6,
-            ).alias("sq8_score"),
-            F.round(_dot_flat(F.col("qv"), F.col("cv")), 6).alias("exact_dot"),
-        )
+    scored = _sq8_pairs_fold_exact(spark, emb)
     w_sq8 = Window.partitionBy("query_id").orderBy(
         F.col("sq8_score").desc(), F.col("neighbor_id").asc()
     )
@@ -993,25 +950,22 @@ def _dot_flat(a, b):
     return _ft.reduce(lambda x, y: x + y, terms)
 
 
-# Corpus size up to which the SQ8 judged pair stage keeps the unrolled
-# Catalyst brute form (the shape the DuckDB oracle mirrors — the 500-row
-# smoke SFs keep executing it on every suite run); above it the
-# fold-exact Arrow twin scores the pairs (bit-identical; the
-# similarity.PAIR_BRUTE_MAX_ROWS pattern, r19 optimization).
-SQ8_BRUTE_MAX_ROWS = 500
-
-
 def _sq8_pairs_fold_exact(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """(queries × corpus) SQ8-ADC + exact-dot pair stage as one narrow
-    Arrow pass — the fold-exact twin of the judged projection: per pair,
+    Arrow pass: per pair,
     sq8_score = round6((m/127)·Σ q_i·floor(c_i·127/m + 0.5)) and
     exact_dot = round6(Σ q_i·c_i), every multiply/divide/add/floor the
-    identical IEEE-754 f64 op sequence as `_sq8_dot`/`_dot_flat`
-    (numpy ufuncs — no FMA, no re-association), pairs with
-    query_id == neighbor_id dropped like the join condition."""
+    oracle's IEEE-754 f64 op sequence (numpy ufuncs — no FMA, no
+    re-association), pairs with query_id == neighbor_id dropped like
+    the oracle's join condition."""
     import numpy as np
 
-    from .similarity import _collect_query_vectors, _fold_dots_np, _round6_np
+    from .similarity import (
+        _collect_query_vectors,
+        _fold_dots_np,
+        _round6_np,
+        _sq8_scores_np,
+    )
 
     q_ids, qmat = _collect_query_vectors(emb)
     bc = spark.sparkContext.broadcast((q_ids, qmat))
@@ -1025,16 +979,7 @@ def _sq8_pairs_fold_exact(spark: SparkSession, emb: DataFrame) -> DataFrame:
                 continue
             cv = np.stack(pdf["cv"].to_numpy()).astype(np.float64)  # b×dim
             n_ids = pdf["neighbor_id"].to_numpy()
-            m = np.max(np.abs(cv), axis=1)  # greatest(|c_i|): order-free
-            # ADC fold: term_d = q_d · floor(c_d·127/m + 0.5); the code
-            # derivation is elementwise (·127 → /m → +0.5 → floor), one
-            # IEEE rounding per step exactly like the Catalyst expression
-            codes0 = np.floor(cv[:, 0] * 127.0 / m + 0.5)
-            acc = codes0[:, None] * qmat[None, :, 0]
-            for d in range(1, cv.shape[1]):
-                code_d = np.floor(cv[:, d] * 127.0 / m + 0.5)
-                acc = acc + code_d[:, None] * qmat[None, :, d]
-            sq8 = _round6_np((m / 127.0)[:, None] * acc)
+            sq8 = _sq8_scores_np(cv, qmat)
             exact = _round6_np(_fold_dots_np(cv, qmat))
             keep = n_ids[:, None] != q_ids[None, :]
             bi, qi = np.nonzero(keep)
@@ -1121,9 +1066,9 @@ def ivfsq8_results(
     in-cell ordering (brute-tier ADC recall 0.98 vs PQ's ~0.2), so the
     probe ceiling is the only recall loss left.
 
-    Scale shape: cell assignment is one narrow Arrow matmul stage
-    (``_probe_cells_udf``); the only exchanges are the broadcast of the
-    q·nprobe query-cell rows, the top-R window over probed candidates
+    Scale shape: cell assignment and SQ8-ADC scoring are one narrow
+    Arrow pass (``similarity._ivf_probed_pairs_fold_exact``); the only
+    exchanges are the top-R window over probed candidates
     (vectors dropped first — only ids and scores shuffle), and the R·q-row
     exact re-rank refetch.  SQ8 codes are decoded inline from the stored
     vectors here (floor(x·127/m + 0.5), exact on identical doubles); the
@@ -1132,9 +1077,7 @@ def ivfsq8_results(
     operator (snapshots_op)."""
     from .similarity import (
         IVF_NPROBE,
-        _emb_count,
         _ivf_probed_pairs_fold_exact,
-        _probe_cells_udf,
         collect_centroids,
         fitted_centroids,
     )
@@ -1143,41 +1086,7 @@ def ivfsq8_results(
         fitted_centroids(spark, sf_dir) if fitted else collect_centroids(spark, sf_dir)
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    if _emb_count(emb, sf_dir) > SQ8_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin of the probed SQ8-ADC pair stage (r20
-        # optimization): same pair set, bitwise-same scores, the cell
-        # join carried through one narrow MapInPandas pass; the 500-row
-        # oracle smoke SFs keep the expression-join form below
-        pair_scores = _ivf_probed_pairs_fold_exact(
-            spark, emb, cents, IVF_NPROBE, "sq8"
-        )
-    else:
-        top1 = _probe_cells_udf(cents, 1)
-        topn = _probe_cells_udf(cents, IVF_NPROBE)
-
-        corpus = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv"),
-            _sq8_max_abs(F.col("embedding")).alias("m"),
-        ).withColumn("cell", F.element_at(top1(F.col("cv")), 1))
-        query_cells = (
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-            .withColumn("cell", F.explode(topn(F.col("qv"))))
-        )
-        pair_scores = (
-            corpus.join(F.broadcast(query_cells), "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    (F.col("m") / F.lit(127.0))
-                    * _sq8_dot(F.col("qv"), F.col("cv"), F.col("m")),
-                    6,
-                ).alias("sq8_score"),
-            )
-        )
+    pair_scores = _ivf_probed_pairs_fold_exact(spark, emb, cents, IVF_NPROBE, "sq8")
     w_short = Window.partitionBy("query_id").orderBy(
         F.col("sq8_score").desc(), F.col("neighbor_id").asc()
     )

@@ -18,8 +18,12 @@ embedding column.
 
 Dot products are built as an explicit left-folded sum over
 `element_at(...)` terms — bit-identical IEEE order to the generated
-DuckDB oracle expression, so value hashes match exactly.  All JVM-side;
-no UDF anywhere.
+DuckDB oracle expression, so value hashes match exactly.  The
+query × corpus pair stages (cosine/hard-negative/SQ8 top-k, the IVF
+probed pairs, the dense shortlist, semantic decontamination) score in
+one ``mapInPandas`` pass instead: a numpy LEFT FOLD in the oracle's op
+order (``_fold_dots_np``/``_fold_norms_np``/``_round6_np``), so those
+values match bitwise too.
 """
 
 from __future__ import annotations
@@ -57,14 +61,15 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-# --- fold-exact numpy twins of the Catalyst expressions (r19 optimization) ----
-# Each replays the judged expression's IEEE-754 op sequence term for term
+# --- fold-exact numpy kernels for the pair stages ----------------------------
+# Each replays the oracle expression's IEEE-754 op sequence term for term
 # (one f64 multiply + one f64 add per dim, numpy ufuncs — no FMA, no
 # pairwise/BLAS re-association), so results are BIT-identical to `_dot`/
-# `_norm`, not merely close.  They exist because evaluating the 64-term
-# unrolled expression per pair in Catalyst walks a ~130-node tree 64× per
-# row — ~3 orders of magnitude more expensive per pair than one
-# vectorized fold step over an Arrow batch (guide §4.2).
+# `_norm` and `_sql_dot`, not merely close.  The pair stages use them
+# because evaluating the 64-term unrolled expression per pair in
+# Catalyst walks a ~130-node tree 64× per row — ~3 orders of magnitude
+# more expensive per pair than one vectorized fold step over an Arrow
+# batch.
 
 
 def _fold_norms_np(mat):
@@ -88,6 +93,21 @@ def _fold_dots_np(m, q):
     return acc
 
 
+def _sq8_scores_np(c, q):
+    """b×nq SQ8-ADC scores round6((m/127)·Σ q_d·floor(c_d·127/m + 0.5)),
+    m = max|c_d| (order-free); c: b×dim corpus, q: nq×dim queries.  The
+    code derivation is elementwise (·127 → /m → +0.5 → floor), one IEEE
+    rounding per step, and the ADC sum is a LEFT FOLD — the oracle's op
+    sequence."""
+    import numpy as np
+
+    m = np.max(np.abs(c), axis=1)
+    acc = np.floor(c[:, 0] * 127.0 / m + 0.5)[:, None] * q[None, :, 0]
+    for d in range(1, c.shape[1]):
+        acc = acc + np.floor(c[:, d] * 127.0 / m + 0.5)[:, None] * q[None, :, d]
+    return _round6_np((m / 127.0)[:, None] * acc)
+
+
 def _round6_np(a):
     """``F.round(x, 6)`` over an ndarray — the `_round6_halfup`
     BigDecimal-HALF_UP-on-shortest-repr semantics per element (np.round
@@ -103,7 +123,9 @@ def _round6_np(a):
 
 def _collect_query_vectors(emb: DataFrame, with_labels: bool = False):
     """The N_QUERIES query vectors as driver-side model state (ids
-    ascending): (ids int64[nq], qmat float64[nq×dim][, labels int64[nq]])."""
+    ascending): (ids int64[nq], qmat float64[nq×dim][, labels int64[nq]]).
+    Collecting to the driver is fine while N_QUERIES is a constant.  No
+    query rows gives a (0, DIM) matrix, so the scorers yield no pairs."""
     import numpy as np
 
     cols = ["vec_id", "embedding"] + (["label"] if with_labels else [])
@@ -112,7 +134,7 @@ def _collect_query_vectors(emb: DataFrame, with_labels: bool = False):
         key=lambda r: r.vec_id,
     )
     ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    qmat = np.array([r.embedding for r in rows], dtype=np.float64)
+    qmat = np.array([r.embedding for r in rows], dtype=np.float64).reshape(-1, DIM)
     if not with_labels:
         return ids, qmat
     labels = np.array([r.label for r in rows], dtype=np.int64)
@@ -122,13 +144,12 @@ def _collect_query_vectors(emb: DataFrame, with_labels: bool = False):
 def _cosine_pairs_fold_exact(
     spark: SparkSession, emb: DataFrame, with_labels: bool = False
 ) -> DataFrame:
-    """The (queries × corpus) cosine pair stage as ONE narrow Arrow pass —
-    the fold-exact twin of the judged broadcast-join projection: same
-    pair set (neighbor ≠ query, and label ≠ query label when
-    ``with_labels``), same `round(dot/(qn*cn), 6)` values bitwise.
-    Replaces a BroadcastNestedLoopJoin whose per-pair cost is the
-    64-term Catalyst expression walk; the plan becomes scan →
-    MapInPandas, no join, no row expansion before the window."""
+    """The (queries × corpus) cosine pair stage as ONE narrow Arrow pass:
+    the oracle's pair set (neighbor ≠ query, and label ≠ query label
+    when ``with_labels``) and its `round(dot/(qn*cn), 6)` values
+    bitwise.  The plan is scan → MapInPandas, no join, no row expansion
+    before the window — a broadcast join would walk the 64-term
+    Catalyst expression once per pair."""
     import numpy as np
 
     if with_labels:
@@ -188,22 +209,13 @@ def _cosine_pairs_fold_exact(
     return src.mapInPandas(score, schema)
 
 
-# Corpus size up to which the pair ops keep the unrolled Catalyst brute
-# form (the exact shape the DuckDB oracle mirrors): the 500-row oracle
-# smoke SFs (sf0.001/sf0.01) stay on it so the expression form executes
-# on every suite run; above it the fold-exact Arrow twin scores the
-# pairs (bit-identical — collect-compared at sf0.1 and covered by the
-# opt-in sf0.1 DuckDB sweep).  r19 optimization, the semdecon pattern.
-PAIR_BRUTE_MAX_ROWS = 500
-
-
 def _numpy_probe_cells(mat, cents, nprobe: int):
     """The `_probe_cells_udf` assignment rule replayed on a float64
     matrix: per row, the ``nprobe`` nearest centroid ids by cosine, ties
     → lowest id via stable argsort.  IDENTICAL numpy op sequence to the
     in-plan pandas UDF (same matmul, same np.linalg.norm, same stable
-    argsort), so cells computed driver-side for the twin equal the cells
-    the judged plan assigns executor-side."""
+    argsort), so cells computed driver-side equal the cells the UDF
+    assigns executor-side."""
     import numpy as np
 
     cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
@@ -218,22 +230,18 @@ def _numpy_probe_cells(mat, cents, nprobe: int):
 def _ivf_probed_pairs_fold_exact(
     spark: SparkSession, emb: DataFrame, cents, nprobe: int, score: str
 ) -> DataFrame:
-    """The IVF probed-pair stage as ONE narrow Arrow pass — the r20
-    fold-exact twin of the judged cell-join projections in
-    ``ivf_topk_results`` (score='cosine') and ``quantization.
-    ivfsq8_results`` (score='sq8'): the same pair SET (corpus rows whose
-    top-1 cell is probed by the query, neighbor ≠ query) and bitwise the
-    same scores, with the cell join carried through the Arrow stage
-    instead of a per-pair 64-term Catalyst expression walk.
+    """The IVF probed-pair stage of ``ivf_topk_results`` (score='cosine')
+    and ``quantization.ivfsq8_results`` (score='sq8') as ONE narrow
+    Arrow pass: pairs are corpus rows whose top-1 cell is probed by the
+    query (neighbor ≠ query), with the cell join carried through the
+    Arrow stage instead of a per-pair 64-term Catalyst expression walk.
 
     Query probe cells are computed driver-side by replaying the
     `_probe_cells_udf` numpy rule on the collected query matrix (model
     state, the `collect_centroids` pattern); corpus cell assignment
-    replays the identical rule per Arrow batch — so pair membership
-    matches the judged plan exactly.  Scores replay the judged IEEE op
-    sequences: round6(fold_dot / (qn·cn)) for cosine,
-    round6((m/127)·Σ qᵢ·floor(cᵢ·127/m + 0.5)) for sq8 (the
-    `_sq8_pairs_fold_exact` arithmetic)."""
+    replays the identical rule per Arrow batch.  Scores replay the
+    oracle's IEEE op sequences: round6(fold_dot / (qn·cn)) for cosine,
+    ``_sq8_scores_np`` for sq8."""
     import numpy as np
 
     q_ids, qmat = _collect_query_vectors(emb)
@@ -260,14 +268,8 @@ def _ivf_probed_pairs_fold_exact(
                 scores = _round6_np(
                     _fold_dots_np(m, qmat) / (qn[None, :] * cn[:, None])
                 )
-            else:  # sq8: the _sq8_pairs_fold_exact ADC arithmetic
-                mx = np.max(np.abs(m), axis=1)  # greatest(|c_i|): order-free
-                codes0 = np.floor(m[:, 0] * 127.0 / mx + 0.5)
-                acc = codes0[:, None] * qmat[None, :, 0]
-                for d in range(1, m.shape[1]):
-                    code_d = np.floor(m[:, d] * 127.0 / mx + 0.5)
-                    acc = acc + code_d[:, None] * qmat[None, :, d]
-                scores = _round6_np((mx / 127.0)[:, None] * acc)
+            else:
+                scores = _sq8_scores_np(m, qmat)
             bi, qi = np.nonzero(keep)
             yield pd.DataFrame(
                 {
@@ -365,37 +367,11 @@ FROM per ORDER BY label
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force top-k: queries (vec_id < N_QUERIES) × corpus.
-
-    Norms are computed once per vector *before* the join (an O(n) pass),
-    so the O(n·q) pair stage does one dot product, not three.
-    """
+    """Exact brute-force top-k: queries (vec_id < N_QUERIES) × corpus,
+    scored in one Arrow pass (``_cosine_pairs_fold_exact``) and ranked by
+    a per-query window."""
     emb = load_table(spark, sf_dir, "embeddings")
-    if _emb_count(emb, sf_dir) > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin: same pairs, bitwise-same cosines, one
-        # narrow MapInPandas pass instead of the per-pair expression walk
-        scored = _cosine_pairs_fold_exact(spark, emb)
-    else:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            _norm(F.col("embedding")).alias("qn"),
-        )
-        corpus = _materialized(
-            emb.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("cv"),
-                _norm(F.col("embedding")).alias("cn"),
-            )
-        )
-        scored = (
-            corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias("cosine"),
-            )
-        )
+    scored = _cosine_pairs_fold_exact(spark, emb)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= TOP_K
@@ -408,44 +384,13 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     negatives" an embedding model trains against (easy negatives are
     random; hard ones are the near-misses that actually move the loss).
 
-    Same plan as the exact top-k (broadcast queries, one corpus pass,
-    per-query window) with the label inequality pushed into the pair
-    stage, so mismatched pairs are dropped before the window shuffle.
+    Same plan as the exact top-k (one Arrow pass over the corpus, then
+    the per-query window) with the label inequality applied inside the
+    pair stage, so mismatched pairs are dropped before the window shuffle.
     At 100 TB the candidate stage swaps to the IVF/PQ tier exactly like
     retrieval does; mining is retrieval with a label filter."""
     emb = load_table(spark, sf_dir, "embeddings")
-    if _emb_count(emb, sf_dir) > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin (same pair set incl. the label filter,
-        # bitwise-same cosines) — see _cosine_pairs_fold_exact
-        scored = _cosine_pairs_fold_exact(spark, emb, with_labels=True)
-    else:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("query_label"),
-            F.col("embedding").alias("qv"),
-            _norm(F.col("embedding")).alias("qn"),
-        )
-        corpus = _materialized(
-            emb.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("label").alias("neg_label"),
-                F.col("embedding").alias("cv"),
-                _norm(F.col("embedding")).alias("cn"),
-            )
-        )
-        scored = corpus.join(
-            F.broadcast(queries),
-            (F.col("query_id") != F.col("neighbor_id"))
-            & (F.col("query_label") != F.col("neg_label")),
-        ).select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neg_label",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias(
-                "cosine"
-            ),
-        )
+    scored = _cosine_pairs_fold_exact(spark, emb, with_labels=True)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -575,61 +520,17 @@ def ivf_topk_results(
     measures better on this fixture — recall 0.80 (seed) vs 0.78
     (fitted) at sf0.1 — see ``fitted_centroids`` for the why.
 
-    Cell assignment (corpus AND queries) is one Arrow-batched matmul
-    against the collected centroid matrix (``_probe_cells_udf``) — a
-    narrow stage with no join and no row expansion; the only exchanges
-    in the whole plan are the broadcast of the ~q·nprobe query-cell rows
-    and the final per-query top-k window over the probed candidates."""
+    Cell assignment and pair scoring are one narrow Arrow pass against
+    the collected centroid matrix (``_ivf_probed_pairs_fold_exact``) —
+    no join and no row expansion; the only exchange in the whole plan is
+    the final per-query top-k window over the probed candidates.  Every
+    corpus vector sits in exactly ONE cell (its top-1), so a (query,
+    neighbor) pair occurs at most once even with nprobe > 1."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = (
         fitted_centroids(spark, sf_dir) if fitted else collect_centroids(spark, sf_dir)
     )
-    if _emb_count(emb, sf_dir) > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin of the probed-pair stage (r20
-        # optimization): same pair set, bitwise-same cosines, the cell
-        # join carried through one narrow MapInPandas pass — see
-        # _ivf_probed_pairs_fold_exact; the 500-row oracle smoke SFs
-        # keep the expression-join form below
-        scored = _ivf_probed_pairs_fold_exact(
-            spark, emb, cents, IVF_NPROBE, "cosine"
-        )
-    else:
-        top1 = _probe_cells_udf(cents, 1)
-        topn = _probe_cells_udf(cents, IVF_NPROBE)
-
-        # NO repartition spread here: the UDF stage is narrow and Arrow
-        # batch-sized, so extra splits just multiply Python-worker startups
-        # (32 simultaneous numpy imports cost ~12 s on the 2 k-row fixture);
-        # at scale the scan already has thousands of splits.
-        corpus_cells = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv"),
-            _norm(F.col("embedding")).alias("cn"),
-        ).withColumn("cell", F.element_at(top1(F.col("cv")), 1))
-
-        # queries probe their IVF_NPROBE nearest cells (tiny: q·nprobe rows)
-        query_cells = (
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qv"),
-                _norm(F.col("embedding")).alias("qn"),
-            )
-            .withColumn("cell", F.explode(topn(F.col("qv"))))
-        )
-        scored = (
-            corpus_cells.join(F.broadcast(query_cells), "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias("cosine"),
-            )
-            # no distinct needed: every corpus vector is assigned to exactly ONE
-            # cell (top-1 above), so a (query, neighbor) pair occurs at most once
-            # even with nprobe > 1 — verified empirically; the distinct here was
-            # a full extra shuffle of the candidate set
-        )
+    scored = _ivf_probed_pairs_fold_exact(spark, emb, cents, IVF_NPROBE, "cosine")
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= TOP_K
@@ -643,9 +544,9 @@ def ivf_topk_results(
 IVF_RECALL_MIN = 0.5
 
 # Corpus size above which single-query dense shortlists (hybrid RRF's
-# dense side, MMR's relevance pool) abandon the exact brute-force scorer
-# for the IVF cell probe.  2M 64-dim float64 vectors ≈ 1 GiB of scan per
-# query — past that an O(corpus) pass per query is the wrong plan, and
+# dense side, MMR's relevance pool) restrict the exact scorer's
+# candidates to the IVF cell probe.  2M 64-dim float64 vectors ≈ 1 GiB
+# of scan per query — past that an O(corpus) pass per query is the wrong plan, and
 # the threshold makes it physically unreachable rather than a docstring
 # promise (the PageRank broadcast-threshold pattern, analytics.py).
 DENSE_SHORTLIST_BRUTE_MAX_ROWS = 2_000_000
@@ -670,97 +571,59 @@ def dense_shortlist(
     """Top-k corpus vectors by cosine to one query embedding —
     ``(vec_id, cosine, cv, cn)``, ordered (cosine desc, vec_id).
 
-    Below ``DENSE_SHORTLIST_BRUTE_MAX_ROWS`` corpus rows the scoring is
-    EXACT: the 500-row oracle smoke SFs run the brute Catalyst scorer
-    (one broadcast query vector, narrow corpus pass, per-partition
-    TakeOrdered) — the form the DuckDB oracles mirror — and above
-    ``PAIR_BRUTE_MAX_ROWS`` the same scores come from the fold-exact
-    Arrow twin (bit-identical, one MapInPandas pass; r19 optimization).
-    Beyond the threshold the candidate set is restricted to the query's
-    ``IVF_NPROBE`` nearest inverted-file cells (the same seed quantizer
-    as ``ivf_topk_results``) before scoring: the per-query cost drops
-    from O(corpus) to O(corpus/cells·nprobe) and the corpus-wide
-    assignment is one narrow Arrow matmul stage, amortizable across
-    queries.  The row count is parquet metadata (no data scan) and is
-    memoized per fixture dir, so repeat callers pay zero jobs for the
-    threshold decision."""
+    The query vector is collected to the driver and every candidate is
+    scored in one MapInPandas pass with the oracle's left-folded cosine
+    (bit-identical); the top-k order/limit stays in Spark.  Below
+    ``DENSE_SHORTLIST_BRUTE_MAX_ROWS`` corpus rows every other vector is
+    a candidate, so the shortlist is EXACT.  Beyond it the candidates
+    are first restricted to the query's ``IVF_NPROBE`` nearest
+    inverted-file cells (the same seed quantizer as
+    ``ivf_topk_results``): the per-query scoring cost drops from
+    O(corpus) to O(corpus/cells·nprobe) and the corpus-wide assignment
+    is one narrow Arrow matmul stage, amortizable across queries.  The
+    row count is parquet metadata (no data scan) and is memoized per
+    fixture dir, so repeat callers pay zero jobs for the threshold
+    decision.  An absent query vector gives an empty shortlist, as the
+    oracle's crossJoin against an empty query does."""
+    import numpy as np
+
+    schema = "vec_id long, cosine double, cv array<float>, cn double"
     emb = load_table(spark, sf_dir, "embeddings")
-    n_rows = _emb_count(emb, sf_dir)
-    q = emb.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("qn")
-    )
+    qrow = emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
+    if not qrow:
+        return spark.createDataFrame([], schema)
+    qv = np.array(qrow[0][0], dtype=np.float64)[None, :]
+    qn = float(_fold_norms_np(qv)[0])
     cand = emb.filter(F.col("vec_id") != query_vec_id).select(
-        "vec_id", F.col("embedding").alias("cv"), _norm(F.col("embedding")).alias("cn")
+        "vec_id", F.col("embedding").alias("cv")
     )
-    if n_rows > DENSE_SHORTLIST_BRUTE_MAX_ROWS:
+    if _emb_count(emb, sf_dir) > DENSE_SHORTLIST_BRUTE_MAX_ROWS:
         cents = collect_centroids(spark, sf_dir)
+        probed = [int(c) for c in _numpy_probe_cells(qv, cents, IVF_NPROBE)[0]]
         top1 = _probe_cells_udf(cents, 1)
-        topn = _probe_cells_udf(cents, IVF_NPROBE)
-        probed = q.select(F.explode(topn(F.col("qv"))).alias("cell"))
         cand = (
             cand.withColumn("cell", F.element_at(top1(F.col("cv")), 1))
-            .join(F.broadcast(probed), "cell")
+            .filter(F.col("cell").isin(probed))
             .drop("cell")
         )
-    elif n_rows > PAIR_BRUTE_MAX_ROWS:
-        # fold-exact Arrow twin of the brute scorer (r19 optimization):
-        # bitwise-same cosines/norms, one narrow MapInPandas pass instead
-        # of 2-3 Catalyst expression walks per candidate row; the top-k
-        # order/limit stays in Spark
-        import numpy as np
+    bc = spark.sparkContext.broadcast((qv, qn))
 
-        qrow = (
-            emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
-        )
-        if not qrow:
-            # absent query vector: the brute tier's crossJoin against an
-            # empty q yields no rows — mirror that instead of IndexError
-            # (ADVICE r19)
-            return spark.createDataFrame(
-                [], "vec_id long, cosine double, cv array<float>, cn double"
+    def score(batches):
+        import pandas as pd
+
+        qv, qn = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
+            cn = _fold_norms_np(m)
+            cos = _round6_np(_fold_dots_np(m, qv)[:, 0] / (qn * cn))
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"].to_numpy(), "cosine": cos, "cv": pdf["cv"], "cn": cn}
             )
-        qv = np.array(qrow[0][0], dtype=np.float64)[None, :]
-        qn = float(_fold_norms_np(qv)[0])
-        bc = spark.sparkContext.broadcast((qv, qn))
 
-        def score(batches):
-            import pandas as pd
-
-            qv, qn = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-                cn = _fold_norms_np(m)
-                cos = _round6_np(_fold_dots_np(m, qv)[:, 0] / (qn * cn))
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy(),
-                        "cosine": cos,
-                        "cv": pdf["cv"],
-                        "cn": cn,
-                    }
-                )
-
-        return (
-            emb.filter(F.col("vec_id") != query_vec_id)
-            .select("vec_id", F.col("embedding").alias("cv"))
-            .mapInPandas(
-                score, "vec_id long, cosine double, cv array<float>, cn double"
-            )
-            .orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(k)
-        )
     return (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cosine"),
-            "cv",
-            "cn",
-        )
+        cand.mapInPandas(score, schema)
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
@@ -1719,9 +1582,8 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax tiebreaks on vec_id.
 
     Scale shape: ONE corpus-scale stage — the relevance shortlist via
-    `dense_shortlist` (exact brute force below
-    DENSE_SHORTLIST_BRUTE_MAX_ROWS corpus rows — the form the oracle
-    mirrors — IVF cell probe beyond, so the O(corpus) scan physically
+    `dense_shortlist` (exact below DENSE_SHORTLIST_BRUTE_MAX_ROWS corpus
+    rows, IVF cell probe beyond, so the O(corpus) scan physically
     cannot run at scale).  Everything after is bounded by the
     shortlist: the pairwise sim table is |shortlist|² rows computed once
     by the same Spark expressions, and the K-step greedy argmax runs
@@ -1827,35 +1689,15 @@ SEMDECON_TEST_RESIDUE = 3   # avoids the query ids (vec_id < N_QUERIES)
 # production embedding space with true near-copies would run ~0.95
 SEMDECON_COSINE = 0.4
 
-# Corpus size above which the decontamination sweep abandons the exact
-# broadcast-holdout scorer for the IVF cell restriction (the
-# DENSE_SHORTLIST_BRUTE_MAX_ROWS pattern).  The scale variable is the
-# PAIR count, not the row count: with the 10/90 split the brute scorer
-# evaluates ~0.09·n² dot products, so it goes quadratic long before any
-# row-count intuition bites — the r16 sf1 probe measured 13.7 s at 2k
-# rows (0.36M pairs) ballooning to ~1,030 s at 20k rows (36M pairs),
-# the exact 100× pair growth.  r19 optimization: the tier-2 scorer now
-# reproduces the judged left fold BIT-identically (see
-# `_semdecon_vectorized_exact` — explicit per-dim fold, not BLAS), so
-# the brute expression form is only kept where it costs nothing: the
-# 500-row oracle smoke SFs (sf0.001/sf0.01), where the DuckDB-mirrored
-# Catalyst form still executes on every suite run.  sf0.1 (2k rows,
-# 0.36M pairs) moves to tier 2 — measured 12.9 → 2.9 s warm with
-# collect-compared EQUAL output (and the opt-in sf0.1 DuckDB parity
-# sweep re-proves it against the oracle directly).  The threshold makes
-# the swap a code path, not a docstring promise (test-forced via
-# monkeypatch like dense_shortlist's).
-SEMDECON_BRUTE_MAX_ROWS = 500
-
-# Second tier: up to this corpus size the sweep stays EXACT — bit-exact
-# since r19: the unrolled fold-order expression is replaced by a
+# Corpus size up to which the decontamination sweep stays EXACT: a
 # vectorized per-dim LEFT FOLD over each train Arrow batch against the
 # collected holdout matrix (the eval suite is bounded model state, like
-# the IVF centroids) — same O(n·h) flops and the identical IEEE op
-# sequence, ~3 orders of magnitude cheaper per flop than the Catalyst
-# expression walk.  Beyond it (holdout no longer sensibly broadcastable
-# / flop budget real), the IVF cell restriction prices each train row
-# at a holdout subset instead.
+# the IVF centroids) — the oracle's IEEE op sequence, so bit-identical.
+# The scale variable is the PAIR count, not the row count: with the
+# 10/90 split the sweep evaluates ~0.09·n² dot products.  Beyond it
+# (holdout no longer sensibly broadcastable / flop budget real), the
+# IVF cell restriction prices each train row at a holdout subset
+# instead.
 SEMDECON_VECTORIZED_MAX_ROWS = 2_000_000
 
 # The audit probes HALF the cells per holdout vector (vs IVF_NPROBE=2 of
@@ -1882,12 +1724,11 @@ def _round6_halfup(x: float) -> float:
 def _semdecon_vectorized_exact(
     spark: SparkSession, train: DataFrame, test: DataFrame
 ) -> DataFrame:
-    """The middle decontamination tier: BIT-EXACT max-cosine over the
+    """The exact decontamination scorer: BIT-EXACT max-cosine over the
     full holdout, computed as a vectorized per-dim LEFT FOLD per train
-    Arrow batch against the collected holdout matrix (r19: was a BLAS
-    matmul, exact only up to summation ulp — the fold replays the
-    Catalyst/DuckDB op sequence term for term, so this tier now equals
-    the brute form bitwise and oracle-compared SFs may run it).  No
+    Arrow batch against the collected holdout matrix (``_fold_dots_np``
+    replays the oracle's op sequence term for term; a BLAS matmul would
+    drift by a summation ulp).  No
     join, no row expansion, no shuffle — the plan is a narrow scan of
     train through one ``mapInPandas`` stage; the holdout (an eval
     suite: 10⁴–10⁵ × dim floats, up to ~50 MB) ships once per executor
@@ -1895,7 +1736,7 @@ def _semdecon_vectorized_exact(
     every task binary.
 
     The argmax reproduces the judged total order EXACTLY, including the
-    brute form's rounding semantics: Spark's ``F.round(x, 6)`` is
+    oracle's rounding semantics: Spark's ``F.round(x, 6)`` is
     BigDecimal-HALF-UP on the double's shortest decimal repr, which
     ``np.round`` (binary half-to-even) can flip on half-tie values — so
     the row max is snapped with the same ``Decimal(repr(x))`` HALF_UP
@@ -1915,14 +1756,8 @@ def _semdecon_vectorized_exact(
         ]
     )
     if not hold:
-        # empty holdout: every train row audits as unflagged (the brute
-        # form's left-join semantics)
-        return train.select(
-            F.col("train_id"),
-            F.lit(None).cast("long").alias("nearest_test_id"),
-            F.lit(None).cast("double").alias("max_cosine"),
-            F.lit(0).alias("is_contaminated"),
-        ).orderBy("train_id")
+        # empty holdout: no (train, test) pair, so no rows (as the oracle)
+        return spark.createDataFrame([], out_schema)
     bc = spark.sparkContext.broadcast(
         (
             np.array([r.test_id for r in hold], dtype=np.int64),
@@ -1934,32 +1769,13 @@ def _semdecon_vectorized_exact(
         import pandas as pd  # noqa: F811 — executor-side import
 
         r6 = _round6_halfup
-
-        def fold_norm(mat):
-            # sqrt of the LEFT-FOLDED self-dot — term-for-term the IEEE
-            # op sequence of `_norm` (one f64 multiply, one f64 add per
-            # dim; numpy ufuncs fuse nothing, so no FMA) — bit-identical
-            # to the Catalyst/DuckDB column, not just close
-            acc = mat[:, 0] * mat[:, 0]
-            for d in range(1, mat.shape[1]):
-                acc = acc + mat[:, d] * mat[:, d]
-            return np.sqrt(acc)  # IEEE-754 sqrt == java.lang.Math.sqrt
-
         test_ids, tmat = bc.value
-        tnorm = fold_norm(tmat)
+        tnorm = _fold_norms_np(tmat)
         for pdf in batches:
             if pdf.empty:
                 continue
             m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)  # b×dim
-            # LEFT-FOLDED pairwise dot (vectorized over the b×h pair
-            # plane, folded over dim): replaces the BLAS matmul, whose
-            # pairwise summation could drift an ulp from the judged fold
-            # — this tier is now BIT-identical to the brute form, which
-            # is what lets oracle-compared SFs run it (r19 optimization)
-            dots = m[:, 0, None] * tmat[None, :, 0]
-            for d in range(1, m.shape[1]):
-                dots = dots + m[:, d, None] * tmat[None, :, d]
-            sims = dots / (fold_norm(m)[:, None] * tnorm[None, :])
+            sims = _fold_dots_np(m, tmat) / (_fold_norms_np(m)[:, None] * tnorm[None, :])
             # exact-HALF_UP argmax: snap each row's max, then resolve the
             # smallest test_id among the few candidates whose rounded value
             # can tie it (anything below max - 1e-6 provably rounds lower)
@@ -1998,84 +1814,62 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: cosines round to 6 (the `cosine_topk` rule); the
     per-train argmax is a total order (max cosine, then smallest
-    test_id — expressed as ``max(struct(cosine, -test_id))``, a
-    lexicographic struct max identical on both engines); the flag
-    compares the ROUNDED cosine so both engines threshold the same
-    value.  The split is arithmetic on the id (vec_id mod 10) — RNG-free.
+    test_id); the flag compares the ROUNDED cosine so both engines
+    threshold the same value.  The split is arithmetic on the id
+    (vec_id mod 10) — RNG-free.
 
     Scale shape: the test holdout is bounded (an eval suite, not a
     corpus) and broadcasts; the score pass is one narrow scan of train
-    with per-partition state, and the per-train argmax is a GROUPED MAX
-    — map-side combined to |train| rows before any exchange, unlike a
-    row_number window, which would shuffle and sort the full
-    |train|×|test| score stream (at fixture scale both read ~8 s
-    because the 64-term dot-product pass dominates — the exchange the
-    grouped max removes is what matters at 100 TB, where the score
-    stream is corpus×holdout).
+    with no exchange before the final order.  Scale paths (WIRED, not
+    prose — a Catalyst fold-order crossJoin measured quadratic in
+    PAIRS at sf1: 13.7 s at 2k rows → ~1,030 s at 20k):
 
-    Scale paths (WIRED, not prose — three tiers, r16-recalibrated after
-    the sf1 probe measured the fold-order crossJoin going quadratic in
-    PAIRS: 13.7 s at 2k rows → ~1,030 s at 20k):
-
-    - ≤ ``SEMDECON_BRUTE_MAX_ROWS`` (the 500-row oracle smoke SFs): the
-      exact fold-order broadcast scorer — the form the DuckDB oracle
-      mirrors bit-for-bit, kept executing where it costs nothing;
-    - ≤ ``SEMDECON_VECTORIZED_MAX_ROWS`` (sf0.1 up): BIT-identical
-      semantics, vectorized — the bounded holdout collects to a h×dim
-      float64 matrix (driver model state, the `collect_centroids`
-      pattern) and one ``mapInPandas`` pass scores each train Arrow
-      batch with a vectorized per-dim LEFT FOLD (r19: replaces the BLAS
-      matmul — the fold replays the judged IEEE op sequence, so the
-      answer is equal bitwise, proven by collect-compare at sf0.1 and
-      the opt-in sf0.1 DuckDB sweep); per-row argmax keeps the judged
-      total order (round 6, then max cosine, then smallest test_id);
-      ~1000× cheaper per pair than the expression walk (sf1: 1,030 s →
-      ~10 s measured; sf0.1: 12.9 → 2.9 s);
+    - ≤ ``SEMDECON_VECTORIZED_MAX_ROWS``: EXACT — the bounded holdout
+      collects to a h×dim float64 matrix (driver model state, the
+      `collect_centroids` pattern) and one ``mapInPandas`` pass scores
+      each train Arrow batch with a vectorized per-dim LEFT FOLD in the
+      oracle's IEEE op order, so the answer is equal bitwise; per-row
+      argmax keeps the judged total order (round 6, then max cosine,
+      then smallest test_id) (``_semdecon_vectorized_exact``);
     - above it, the IVF cell restriction (`_probe_cells_udf`, the
       `dense_shortlist` swap pattern) — each train row scores against
-      test vectors probing its cell (~holdout·nprobe/cells).  The left
+      test vectors probing its cell (~holdout·nprobe/cells), and the
+      per-train argmax is a GROUPED MAX of ``struct(cosine, -test_id)``
+      (map-side combined to |train| rows before any exchange).  The left
       join keeps every train row in the audit; a row whose cell no test
       vector probes reports NULL max_cosine and flag 0.  The approx max
       is over a candidate SUBSET, so flags can only be missed, never
-      invented — recall vs brute pinned by
+      invented — recall vs exact pinned by
       ``tests/test_round12_invariants.py``."""
     emb = load_table(spark, sf_dir, "embeddings")
     is_test = (F.col("vec_id") % SEMDECON_TEST_MOD) == SEMDECON_TEST_RESIDUE
     test = emb.filter(is_test).select(
-        F.col("vec_id").alias("test_id"),
-        F.col("embedding").alias("tv"),
-        _norm(F.col("embedding")).alias("tn"),
+        F.col("vec_id").alias("test_id"), F.col("embedding").alias("tv")
     )
     train = emb.filter(~is_test).select(
-        F.col("vec_id").alias("train_id"),
-        F.col("embedding").alias("cv"),
-        _norm(F.col("embedding")).alias("cn"),
+        F.col("vec_id").alias("train_id"), F.col("embedding").alias("cv")
+    )
+    if _emb_count(emb, sf_dir) <= SEMDECON_VECTORIZED_MAX_ROWS:
+        return _semdecon_vectorized_exact(spark, train, test)
+    cents = collect_centroids(spark, sf_dir)
+    top1 = _probe_cells_udf(cents, 1)
+    topn = _probe_cells_udf(cents, SEMDECON_NPROBE)
+    # the bounded holdout probes its SEMDECON_NPROBE nearest cells and
+    # still broadcasts (holdout × nprobe rows); each train row carries
+    # its single top-1 cell, so a (train, test) pair occurs at most once
+    # and fan-out is ~holdout/cells·nprobe per row
+    test_cells = test.withColumn("tn", _norm(F.col("tv"))).withColumn(
+        "cell", F.explode(topn(F.col("tv")))
+    )
+    train_cells = train.withColumn("cn", _norm(F.col("cv"))).withColumn(
+        "cell", F.element_at(top1(F.col("cv")), 1)
     )
     cosine = F.round(
         _dot(F.col("cv"), F.col("tv")) / (F.col("cn") * F.col("tn")), 6
     ).alias("cosine")
-    n_rows = _emb_count(emb, sf_dir)
-    if SEMDECON_BRUTE_MAX_ROWS < n_rows <= SEMDECON_VECTORIZED_MAX_ROWS:
-        return _semdecon_vectorized_exact(spark, train, test)
-    if n_rows > SEMDECON_VECTORIZED_MAX_ROWS:
-        cents = collect_centroids(spark, sf_dir)
-        top1 = _probe_cells_udf(cents, 1)
-        topn = _probe_cells_udf(cents, SEMDECON_NPROBE)
-        # the bounded holdout probes its SEMDECON_NPROBE nearest cells and
-        # still broadcasts (holdout × nprobe rows); each train row
-        # carries its single top-1 cell, so a (train, test) pair occurs
-        # at most once and fan-out is ~holdout/cells·nprobe per row
-        test_cells = test.withColumn("cell", F.explode(topn(F.col("tv"))))
-        train_cells = train.withColumn(
-            "cell", F.element_at(top1(F.col("cv")), 1)
-        )
-        scored = train_cells.join(
-            F.broadcast(test_cells), "cell", "left"
-        ).select("train_id", "test_id", cosine)
-    else:
-        scored = train.crossJoin(F.broadcast(test)).select(
-            "train_id", "test_id", cosine
-        )
+    scored = train_cells.join(F.broadcast(test_cells), "cell", "left").select(
+        "train_id", "test_id", cosine
+    )
     best = scored.groupBy("train_id").agg(
         F.max(
             F.struct(F.col("cosine"), (-F.col("test_id")).alias("neg_id"))

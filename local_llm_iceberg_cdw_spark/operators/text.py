@@ -988,9 +988,9 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     any fusion work, so the rank windows run over ≤25 rows (bounded,
     model-sized — never a corpus-wide global sort); the fusion is a
     full-outer join of two 25-row frames.  The dense side is
-    `dense_shortlist`: the exact brute-force scorer below
-    DENSE_SHORTLIST_BRUTE_MAX_ROWS corpus rows (the form the oracle
-    mirrors — fixture-scale results identical), the IVF cell probe
+    `dense_shortlist`: one Arrow pass with the oracle's left-folded
+    cosine over every corpus row below DENSE_SHORTLIST_BRUTE_MAX_ROWS
+    (exact — bit-identical to the oracle), over the query's IVF cells
     beyond, so the O(corpus)-per-query scan physically cannot run at
     scale; the fusion stage is unchanged either way."""
     from .similarity import dense_shortlist

@@ -120,8 +120,7 @@ def test_semantic_decontamination_ivf_path_engages_and_recalls(spark, monkeypatc
         r.train_id: (r.max_cosine, r.is_contaminated)
         for r in sim.q_semantic_decontamination(spark, SF_SMOKE).collect()
     }
-    monkeypatch.setattr(sim, "SEMDECON_BRUTE_MAX_ROWS", 0)
-    monkeypatch.setattr(sim, "SEMDECON_VECTORIZED_MAX_ROWS", 0)  # r16 middle tier
+    monkeypatch.setattr(sim, "SEMDECON_VECTORIZED_MAX_ROWS", 0)
     approx = {
         r.train_id: (r.max_cosine, r.is_contaminated)
         for r in sim.q_semantic_decontamination(spark, SF_SMOKE).collect()

@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 
 from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
 
-from conftest import SF_SMOKE
-
 
 def _register(spark):
     from local_llm_iceberg_cdw_spark.streaming.table_source import (
@@ -596,52 +594,3 @@ def test_changelog_facade_composes_with_starting_snapshot_id(spark, tmp_path):
         (20, "insert", 4), (21, "insert", 4), (22, "insert", 4),
         (23, "insert", 4), (24, "insert", 4),
     ]
-
-
-# --- r19 OPTIMIZATION: semdecon tier-2 at sf0.1 scale -------------------------
-
-
-def test_semdecon_sf01_scale_routes_to_fold_exact_vectorized_tier(spark, monkeypatch):
-    """r19 optimization: with the tier-2 scorer made fold-EXACT (bitwise
-    equal to the brute expression — test_round16_invariants pins the
-    equality, the opt-in sf0.1 DuckDB sweep pins it against the oracle),
-    SEMDECON_BRUTE_MAX_ROWS dropped 5000 → 500 so the 2k-row sf0.1 bench
-    surface runs the vectorized tier (measured 12.9 → 2.9 s warm) while
-    the 500-row oracle smoke SFs keep executing the DuckDB-mirrored
-    Catalyst form.  Pin the routing at both scales via the row-count
-    cache (no data or timing dependence): a 2000-row count must plan the
-    mapInPandas scorer (no pair-expanding join), a 500-row count must
-    keep the brute BroadcastNestedLoopJoin."""
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
-    def plan_for(n_rows: int) -> str:
-        monkeypatch.setitem(sim._EMB_COUNT_CACHE, SF_SMOKE, n_rows)
-        df = sim.q_semantic_decontamination(spark, SF_SMOKE)
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    fast = plan_for(2000)
-    assert "MapInPandas" in fast and "BroadcastNestedLoopJoin" not in fast
-    brute = plan_for(500)
-    assert "BroadcastNestedLoopJoin" in brute and "MapInPandas" not in brute
-
-
-def test_pair_scorers_route_to_fold_exact_twins_at_scale(spark, monkeypatch):
-    """r19 optimization: cosine_topk / hard_negative_mining /
-    sq8_adc_topk swap their pair stage (BroadcastNestedLoopJoin + the
-    64-term unrolled Catalyst fold per pair) for the fold-exact Arrow
-    twin above 500 corpus rows — bit-identical output (collect-compared
-    EQUAL at sf0.1; the opt-in sf0.1 DuckDB sweep covers all three), the
-    500-row oracle smoke SFs keep executing the DuckDB-mirrored
-    expression form.  Pin the routing via the row-count cache."""
-    from local_llm_iceberg_cdw_spark.operators import quantization as qz
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
-    def plan_for(fn, n_rows: int) -> str:
-        monkeypatch.setitem(sim._EMB_COUNT_CACHE, SF_SMOKE, n_rows)
-        return fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-
-    for fn in (sim.q_cosine_topk, sim.q_hard_negative_mining, qz.q_sq8_adc_topk):
-        fast = plan_for(fn, 2000)
-        assert "MapInPandas" in fast and "BroadcastNestedLoopJoin" not in fast, fn
-        brute = plan_for(fn, 500)
-        assert "BroadcastNestedLoopJoin" in brute and "MapInPandas" not in brute, fn

@@ -1,166 +1,193 @@
-"""Round-20 invariants — default-suite forced-tier OUTPUT-EQUALITY tests
-for every fold-exact Arrow twin the r19 optimization round introduced
-(VERDICT r19 #1 / ADVICE r19: until now the twins were covered only by
-plan-ROUTING tests plus the opt-in sf0.1 sweep, so a numerical
-regression in the numpy folds — dtype change, fold reorder, FMA-enabled
-BLAS swap — would pass the default suite while silently changing judged
-outputs at sf ≥ 0.1).
+"""Round-20 invariants for the embedding pair stages, which score every
+table below the IVF cut in one fold-exact Arrow pass (``mapInPandas``).
 
-Pattern (the round-16 semdecon test): run the op on the 500-row smoke
-fixture twice — once on the brute Catalyst tier (the form the DuckDB
-oracle mirrors, the default at this row count) and once with the tier
-router forced to the Arrow twin via the `_EMB_COUNT_CACHE` monkeypatch —
-and assert EXACT row equality (bit-identical floats, not approx)."""
+The registry ops (cosine_topk, hard_negative_mining, sq8_adc_topk,
+semantic_decontamination, mmr, hybrid_rrf, rag_context_pack) are
+compared bit-exactly with their DuckDB oracle by
+``tests/test_oracle_parity.py``.  The production helpers below are not
+registry entries, so their exact rows are built here in DuckDB: scores
+and ranks from the oracle's own scored-pair SQL, IVF cell membership
+from ``_numpy_probe_cells``."""
 
 from __future__ import annotations
 
+import duckdb
+import numpy as np
+import pandas as pd
 import pytest
 
+from local_llm_iceberg_cdw_spark.operators import quantization as qz
+from local_llm_iceberg_cdw_spark.operators import similarity as sim
 from tests.conftest import SF_SMOKE
 
 
-def _rows(df):
-    """Collected rows as a sorted list of tuples; array cells tupled so
-    exact equality is well-defined."""
+def _rows(df_or_rows):
+    """Rows as a sorted list of tuples; array cells tupled so exact
+    equality is well-defined."""
+    rows = df_or_rows.collect() if hasattr(df_or_rows, "collect") else df_or_rows
     out = []
-    for r in df.collect():
-        out.append(
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-        )
+    for r in rows:
+        out.append(tuple(tuple(v) if isinstance(v, list) else v for v in r))
     return sorted(out, key=repr)
 
 
-def _force_twin(monkeypatch, n_rows=2000):
-    """Route the pair ops' tier selection: the smoke fixture holds 500
-    embeddings, so a faked count of 2000 forces the fold-exact Arrow
-    twin over the very same data the brute tier scored."""
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
-    monkeypatch.setitem(sim._EMB_COUNT_CACHE, SF_SMOKE, n_rows)
-
-
-def test_cosine_topk_fold_twin_matches_brute_exactly(spark, monkeypatch):
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
-    brute = _rows(sim.q_cosine_topk(spark, SF_SMOKE))
-    _force_twin(monkeypatch)
-    twin = _rows(sim.q_cosine_topk(spark, SF_SMOKE))
-    assert twin == brute and len(brute) > 0
+def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    return con
 
 
-def test_hard_negative_mining_fold_twin_matches_brute_exactly(spark, monkeypatch):
-    """The labelled variant: the twin applies the label filter inside
-    the Arrow pass — pair set AND cosines must match bitwise."""
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
-    brute = _rows(sim.q_hard_negative_mining(spark, SF_SMOKE))
-    _force_twin(monkeypatch)
-    twin = _rows(sim.q_hard_negative_mining(spark, SF_SMOKE))
-    assert twin == brute and len(brute) > 0
-
-
-def test_sq8_adc_topk_fold_twin_matches_brute_exactly(spark, monkeypatch):
-    """`_sq8_pairs_fold_exact` replays the code derivation
-    floor(x·127/m + 0.5) plus both score folds — sq8_score, exact_dot,
-    recall_q and ranks must all match bitwise."""
-    from local_llm_iceberg_cdw_spark.operators import quantization as qz
-
-    brute = _rows(qz.q_sq8_adc_topk(spark, SF_SMOKE))
-    _force_twin(monkeypatch)
-    twin = _rows(qz.q_sq8_adc_topk(spark, SF_SMOKE))
-    assert twin == brute and len(brute) > 0
+def _register_probed_pairs(con) -> None:
+    """Register ``probed(query_id, neighbor_id)``: the corpus rows whose
+    top-1 seed cell is one of the query's IVF_NPROBE nearest cells."""
+    rows = con.execute("SELECT vec_id, embedding FROM embeddings ORDER BY vec_id").fetchall()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    cents = [
+        (int(i), list(v)) for i, v in zip(ids, mat) if i < sim.IVF_N_CENTROIDS
+    ]
+    cell = sim._numpy_probe_cells(mat, cents, 1)[:, 0]
+    is_q = ids < sim.N_QUERIES
+    probes = sim._numpy_probe_cells(mat[is_q], cents, sim.IVF_NPROBE)
+    pairs = [
+        (int(q), int(n))
+        for q, cells in zip(ids[is_q], probes)
+        for n in ids[np.isin(cell, cells)]
+    ]
+    con.register("probed", pd.DataFrame(pairs, columns=["query_id", "neighbor_id"]))
 
 
-def test_dense_shortlist_arrow_tier_matches_brute_exactly(spark, monkeypatch):
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
+def _with_probed_join(sql: str, join: str, query_col: str) -> str:
+    restricted = sql.replace(
+        join,
+        f"{join} JOIN probed p ON p.query_id = {query_col}"
+        " AND p.neighbor_id = c.neighbor_id",
+    )
+    assert restricted != sql, "oracle SQL no longer has the expected join"
+    return restricted
 
-    brute = _rows(sim.dense_shortlist(spark, SF_SMOKE, sim.MMR_QUERY_VEC, 15))
-    _force_twin(monkeypatch)
-    twin = _rows(sim.dense_shortlist(spark, SF_SMOKE, sim.MMR_QUERY_VEC, 15))
-    assert twin == brute and len(brute) == 15
+
+def test_dense_shortlist_arrow_tier_matches_brute_exactly(spark):
+    """The shortlist rows (vec_id, cosine, cv, cn) equal the `short` CTE
+    of the MMR oracle — the brute-force DuckDB scorer — bit for bit."""
+    sql = sim._mmr_sql()
+    sql = sql[: sql.index("), pairs AS")] + ")\nSELECT vec_id, rel, cv, cn FROM short"
+    expected = _duck(SF_SMOKE).execute(sql).fetchall()
+    got = _rows(sim.dense_shortlist(spark, SF_SMOKE, sim.MMR_QUERY_VEC, sim.MMR_SHORTLIST))
+    assert got == _rows(expected) and len(got) == sim.MMR_SHORTLIST
 
 
-def test_dense_shortlist_arrow_tier_absent_query_returns_empty(spark, monkeypatch):
-    """ADVICE r19: the Arrow tier's query-vector collect must degrade to
-    an empty shortlist (the brute tier's semantics), not IndexError."""
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
-    _force_twin(monkeypatch)
+def test_dense_shortlist_arrow_tier_absent_query_returns_empty(spark):
+    """ADVICE r19: an absent query vector degrades to an empty shortlist
+    (the oracle's crossJoin against an empty query), not IndexError."""
     got = sim.dense_shortlist(spark, SF_SMOKE, 10**9, 15)
     assert got.count() == 0
     assert got.columns == ["vec_id", "cosine", "cv", "cn"]
 
 
-def test_mmr_and_shortlist_consumers_twin_tier_matches_brute_exactly(
-    spark, monkeypatch
-):
-    """The dense_shortlist consumers (MMR's driver-side greedy, hybrid
-    RRF, RAG context pack) must emit identical rows whichever shortlist
-    tier scored the corpus."""
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-    from local_llm_iceberg_cdw_spark.operators.text import (
-        q_hybrid_rrf_search,
-        q_rag_context_pack,
-    )
-
-    ops = [sim.q_mmr_diversified_topk, q_hybrid_rrf_search, q_rag_context_pack]
-    brute = [_rows(fn(spark, SF_SMOKE)) for fn in ops]
-    _force_twin(monkeypatch)
-    twin = [_rows(fn(spark, SF_SMOKE)) for fn in ops]
-    for fn, b, t in zip(ops, brute, twin):
-        assert t == b and len(b) > 0, fn
-
-
 def test_mmr_greedy_degrades_when_shortlist_smaller_than_k(spark, monkeypatch):
     """ADVICE r19: with fewer shortlist rows than MMR_K the greedy must
     stop (fewer picks), not crash on best=None."""
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
     monkeypatch.setattr(sim, "MMR_SHORTLIST", 2)
     got = sim.q_mmr_diversified_topk(spark, SF_SMOKE).collect()
     assert [r.step for r in got] == [1, 2]
 
 
-def test_ivf_topk_results_fold_twin_matches_brute_exactly(spark, monkeypatch):
-    """r20: the IVF probed-pair stage's Arrow twin (cell join carried
-    through MapInPandas) must reproduce the expression-join form
-    row-for-row — same probed pair set, bitwise-same cosines/ranks."""
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
-
-    brute = _rows(sim.ivf_topk_results(spark, SF_SMOKE))
-    _force_twin(monkeypatch)
-    twin = _rows(sim.ivf_topk_results(spark, SF_SMOKE))
-    assert twin == brute and len(brute) > 0
-
-
-def test_ivfsq8_results_fold_twin_matches_brute_exactly(spark, monkeypatch):
-    from local_llm_iceberg_cdw_spark.operators import quantization as qz
-
-    brute = _rows(qz.ivfsq8_results(spark, SF_SMOKE))
-    _force_twin(monkeypatch)
-    twin = _rows(qz.ivfsq8_results(spark, SF_SMOKE))
-    assert twin == brute and len(brute) > 0
+def test_ivf_topk_results_fold_twin_matches_brute_exactly(spark):
+    """The IVF probed-pair Arrow pass equals the cosine_topk oracle SQL —
+    brute force in DuckDB — restricted to the probed pairs: same pair
+    set, bitwise-same cosines, same ranks."""
+    con = _duck(SF_SMOKE)
+    _register_probed_pairs(con)
+    sql = _with_probed_join(
+        sim._COSINE_TOPK_SQL, "FROM q JOIN c ON c.neighbor_id <> q.query_id", "q.query_id"
+    )
+    expected = con.execute(sql).fetchall()
+    got = _rows(
+        sim.ivf_topk_results(spark, SF_SMOKE).select(
+            "query_id", "neighbor_id", "cosine", "rank"
+        )
+    )
+    assert got == _rows(expected) and len(got) > 0
 
 
-def test_ivf_pair_ops_route_to_fold_exact_twins_at_scale(spark, monkeypatch):
-    """Routing pin (the r19 pattern): above PAIR_BRUTE_MAX_ROWS the IVF
-    pair stages plan the MapInPandas twin with NO cell join; at the
-    500-row oracle smoke scale they keep the broadcast cell join the
-    DuckDB-mirrored recall harnesses exercise."""
-    from local_llm_iceberg_cdw_spark.operators import quantization as qz
-    from local_llm_iceberg_cdw_spark.operators import similarity as sim
+def test_ivfsq8_results_fold_twin_matches_brute_exactly(spark):
+    """ivfsq8_results equals the sq8_adc_topk oracle's scored pairs —
+    brute force in DuckDB — restricted to the probed pairs, cut to the
+    PQ_RERANK best SQ8 scores, then re-ranked by exact dot."""
+    con = _duck(SF_SMOKE)
+    _register_probed_pairs(con)
+    sql = _with_probed_join(
+        qz._sq8_sql(),
+        f"JOIN corpus c ON q.vec_id < {sim.N_QUERIES} AND c.neighbor_id <> q.vec_id",
+        "q.vec_id",
+    )
+    sql = sql[: sql.index("), ranked AS")] + f"""
+), short AS (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY sq8_score DESC, neighbor_id ASC) AS srank
+  FROM scored
+), reranked AS (
+  SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY exact_dot DESC, neighbor_id ASC) AS rank
+  FROM short WHERE srank <= {qz.PQ_RERANK}
+)
+SELECT query_id, neighbor_id FROM reranked WHERE rank <= {sim.TOP_K}
+"""
+    expected = con.execute(sql).fetchall()
+    got = _rows(qz.ivfsq8_results(spark, SF_SMOKE))
+    assert got == _rows(expected) and len(got) > 0
 
-    def plan_for(fn, n_rows):
-        monkeypatch.setitem(sim._EMB_COUNT_CACHE, SF_SMOKE, n_rows)
-        return fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
 
-    for fn in (sim.ivf_topk_results, qz.ivfsq8_results):
-        # twin: pair stage is MapInPandas, the _probe_cells_udf pandas
-        # UDF (ArrowEvalPython) is gone from the plan entirely
-        fast = plan_for(fn, 2000)
-        assert "MapInPandas" in fast and "ArrowEvalPython" not in fast, fn
-        brute = plan_for(fn, 500)
-        assert "ArrowEvalPython" in brute and "MapInPandas" not in brute, fn
+def test_pair_stages_plan_one_arrow_pass(spark):
+    """At the real 500-row fixture count, with nothing forced, every
+    embedding pair stage plans the MapInPandas scorer and no
+    BroadcastNestedLoopJoin (the per-pair Catalyst expression walk)."""
+    ops = {
+        "cosine_topk": sim.q_cosine_topk,
+        "hard_negative_mining": sim.q_hard_negative_mining,
+        "sq8_adc_topk": qz.q_sq8_adc_topk,
+        "semantic_decontamination": sim.q_semantic_decontamination,
+        "ivf_topk_results": sim.ivf_topk_results,
+        "ivfsq8_results": qz.ivfsq8_results,
+        "dense_shortlist": lambda s, sf: sim.dense_shortlist(s, sf, sim.MMR_QUERY_VEC, 15),
+    }
+    for name, fn in ops.items():
+        plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+# the rows each op keeps when its query side (the holdout, for the
+# decontamination audit) is empty
+_NO_QUERY_ROWS = {
+    "cosine_topk": f"vec_id >= {sim.N_QUERIES}",
+    "hard_negative_mining": f"vec_id >= {sim.N_QUERIES}",
+    "sq8_adc_topk": f"vec_id >= {sim.N_QUERIES}",
+    "semantic_decontamination": (
+        f"vec_id % {sim.SEMDECON_TEST_MOD} != {sim.SEMDECON_TEST_RESIDUE}"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_NO_QUERY_ROWS))
+def test_empty_query_set_yields_no_rows(spark, tmp_path, name):
+    """A table with no query vectors scores no pairs: the result is
+    empty and equals the oracle, not an IndexError."""
+    from local_llm_iceberg_cdw_spark.operators import all_queries
+
+    duckdb.execute(
+        f"COPY (SELECT * FROM '{SF_SMOKE}/embeddings.parquet' "
+        f"WHERE {_NO_QUERY_ROWS[name]}) "
+        f"TO '{tmp_path}/embeddings.parquet' (FORMAT PARQUET)"
+    )
+    spec = all_queries()[name]
+    got = spec.builder(spark, str(tmp_path)).collect()
+    expected = _duck(str(tmp_path)).execute(spec.oracle).fetchall()
+    assert got == [] and expected == []
 
 
 def test_multiset_equal_rejects_w_collision(spark):
