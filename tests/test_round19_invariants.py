@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 
 from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
 
+from conftest import SF_SMOKE
+
 
 def _register(spark):
     from local_llm_iceberg_cdw_spark.streaming.table_source import (
@@ -594,3 +596,47 @@ def test_changelog_facade_composes_with_starting_snapshot_id(spark, tmp_path):
         (20, "insert", 4), (21, "insert", 4), (22, "insert", 4),
         (23, "insert", 4), (24, "insert", 4),
     ]
+
+
+# --- r19 OPTIMIZATION: semdecon tier-2 at sf0.1 scale -------------------------
+
+
+def test_semdecon_sf01_scale_routes_to_fold_exact_vectorized_tier(spark, monkeypatch):
+    """The semantic decontamination audit scores every corpus size up to
+    SEMDECON_VECTORIZED_MAX_ROWS with the fold-exact mapInPandas scorer
+    (bit-equal to the oracle; test_oracle_parity pins the rows).  Pin the
+    routing via the row-count cache (no data or timing dependence): both
+    the 2000-row sf0.1 count and the 500-row smoke count plan the Arrow
+    scorer with no pair-expanding BroadcastNestedLoopJoin."""
+    from local_llm_iceberg_cdw_spark.operators import similarity as sim
+
+    for n_rows in (2000, 500):
+        monkeypatch.setitem(sim._EMB_COUNT_CACHE, SF_SMOKE, n_rows)
+        df = sim.q_semantic_decontamination(spark, SF_SMOKE)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan and "BroadcastNestedLoopJoin" not in plan, n_rows
+
+
+def test_pair_scorers_route_to_fold_exact_twins_at_scale(spark, monkeypatch):
+    """cosine_topk / hard_negative_mining / sq8_adc_topk and the
+    dense_shortlist behind MMR, hybrid RRF and RAG packing score their
+    pairs in the one fold-exact Arrow pass (bit-identical to the oracle;
+    test_oracle_parity pins the rows) at every size below their IVF cut,
+    never the BroadcastNestedLoopJoin + unrolled Catalyst fold per pair.
+    Pin the plan at the 2000-row sf0.1 count and the 500-row smoke count
+    via the row-count cache."""
+    from local_llm_iceberg_cdw_spark.operators import quantization as qz
+    from local_llm_iceberg_cdw_spark.operators import similarity as sim
+
+    ops = {
+        "cosine_topk": sim.q_cosine_topk,
+        "hard_negative_mining": sim.q_hard_negative_mining,
+        "sq8_adc_topk": qz.q_sq8_adc_topk,
+        "dense_shortlist": lambda s, sf: sim.dense_shortlist(s, sf, sim.MMR_QUERY_VEC, 15),
+    }
+    for n_rows in (2000, 500):
+        monkeypatch.setitem(sim._EMB_COUNT_CACHE, SF_SMOKE, n_rows)
+        for name, fn in ops.items():
+            plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+            assert "MapInPandas" in plan, (name, n_rows)
+            assert "BroadcastNestedLoopJoin" not in plan, (name, n_rows)

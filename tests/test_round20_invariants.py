@@ -142,23 +142,18 @@ SELECT query_id, neighbor_id FROM reranked WHERE rank <= {sim.TOP_K}
     assert got == _rows(expected) and len(got) > 0
 
 
-def test_pair_stages_plan_one_arrow_pass(spark):
-    """At the real 500-row fixture count, with nothing forced, every
-    embedding pair stage plans the MapInPandas scorer and no
-    BroadcastNestedLoopJoin (the per-pair Catalyst expression walk)."""
-    ops = {
-        "cosine_topk": sim.q_cosine_topk,
-        "hard_negative_mining": sim.q_hard_negative_mining,
-        "sq8_adc_topk": qz.q_sq8_adc_topk,
-        "semantic_decontamination": sim.q_semantic_decontamination,
-        "ivf_topk_results": sim.ivf_topk_results,
-        "ivfsq8_results": qz.ivfsq8_results,
-        "dense_shortlist": lambda s, sf: sim.dense_shortlist(s, sf, sim.MMR_QUERY_VEC, 15),
-    }
-    for name, fn in ops.items():
-        plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
+def test_ivf_pair_ops_route_to_fold_exact_twins_at_scale(spark, monkeypatch):
+    """Routing pin: at the 2000-row sf0.1 count and the 500-row smoke
+    count the IVF pair stages plan the MapInPandas scorer with no cell
+    join — neither the _probe_cells_udf pandas UDF (ArrowEvalPython) nor
+    a BroadcastNestedLoopJoin is left in the plan."""
+    for n_rows in (2000, 500):
+        monkeypatch.setitem(sim._EMB_COUNT_CACHE, SF_SMOKE, n_rows)
+        for fn in (sim.ivf_topk_results, qz.ivfsq8_results):
+            plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+            assert "MapInPandas" in plan, (fn, n_rows)
+            assert "ArrowEvalPython" not in plan, (fn, n_rows)
+            assert "BroadcastNestedLoopJoin" not in plan, (fn, n_rows)
 
 
 # the rows each op keeps when its query side (the holdout, for the
