@@ -1007,7 +1007,7 @@ def q_stream_table_readstream_drained(spark: SparkSession, sf_dir: str) -> DataF
          (% 5 == 4) is appended to an AUDIT BRANCH — it lands in the
          manifest AFTER main's head, and a re-drain must NOT stream it
          (``_wap_staged_hidden``: the facade follows ``refs['main']``
-         via ``sessionless_main_lineage``, not the manifest tail);
+         via ``sessionless_main_lineage``, not the newest snapshot);
          ``fast_forward`` publishes the branch and the next drain
          ingests exactly the published delta
          (``_wap_published_ingested``);

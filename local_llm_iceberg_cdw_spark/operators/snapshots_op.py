@@ -40,10 +40,7 @@ def build_versioned_orders(
     early = orders.filter(F.col("o_orderdate") < F.lit(SPLIT_DATE))
     late = orders.filter(F.col("o_orderdate") >= F.lit(SPLIT_DATE))
     table = SnapshotParquetTable(spark, path)
-    table.create(early)
-    snaps = table._load()
-    snaps[0].timestamp_ms = T1_MS  # deterministic commit times
-    table._commit(snaps)
+    table.create(early, timestamp_ms=T1_MS)  # deterministic commit times
     table.append(late, timestamp_ms=T2_MS)
     return table
 

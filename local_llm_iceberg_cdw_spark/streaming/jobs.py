@@ -371,9 +371,10 @@ def make_idempotent_snapshot_sink(
     the manifest (Iceberg's idempotent-writer pattern) makes the replay a
     no-op, which is what upgrades the end-to-end guarantee from
     at-least-once delivery to exactly-once TABLE STATE.  The check is
-    manifest-only (O(snapshots), no data IO) and the manifest commit is
-    atomic (write-temp-then-rename), so a crash mid-append never records
-    the batch id without its data.
+    metadata-only (O(snapshots), no data IO) and the batch id is published
+    in the same metadata version as the commit's rows (one
+    compare-and-swap), so a crash mid-append never records the batch id
+    without its data.
 
     THE RUN SCOPE IS LOAD-BEARING: Spark batch ids restart at 0 per
     checkpoint, so two independent runs under the same ``query_id`` into

@@ -30,8 +30,8 @@ than the JVM parquet reader — at 100 TB prefer the native JVM loop for
 raw throughput and this facade for trigger/rate integration; both share
 the manifest planner, so file pruning and batch extents are identical.
 
-r18 surface: the driver-side planner resolves main's head through
-``_refs.json`` (``sessionless_main_lineage``) so WAP branches and
+r18 surface: the driver-side planner resolves main's head through the
+table's ``main`` ref (``sessionless_main_lineage``) so WAP branches and
 rollbacks stream the PUBLISHED lineage; source options
 ``startingSnapshotId=<id|latest>`` (bounded catch-up for fresh
 checkpoints — the Python API's rate valve cannot cap a run's first
@@ -41,9 +41,9 @@ sink supports PARTITIONED targets — identity fields (r18) and, since
 r19, arithmetic hidden transforms (``days``/``months``/``years``/
 ``hours``/``truncate``; ``bucket`` stays foreachBatch-only) — via
 per-task hive fanout and a layout-preserving sessionless epoch commit,
-and detects concurrent commits instead of clobbering them (r19: the
-recheck also compares the refs file, catching a concurrent
-``rollback_to``).  The CDC twin — every verb class
+which publishes through the format's one compare-and-swap, so a
+concurrent commit, ``rollback_to`` or ref move makes the epoch commit
+raise instead of clobbering it.  The CDC twin — every verb class
 as tagged change rows — is the driver-loop family's
 ``stream_table_cdc`` (streaming/jobs.py): its per-batch ``exceptAll``
 reconstruction needs a SparkSession, which executor-side ``read()``
@@ -66,24 +66,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-MANIFEST = "_snapshots.json"  # formats.snapshot_parquet.MANIFEST (no import:
-# this module must stay executor-picklable without pulling the format stack)
-
-
-def _load_manifest(path: str) -> list[dict]:
-    mf = os.path.join(path, MANIFEST)
-    if not os.path.exists(mf):
-        raise FileNotFoundError(f"not a snapshot table (no {MANIFEST}): {path}")
-    with open(mf) as f:
-        return json.load(f)
-
-
 def _main_lineage(path: str) -> list[dict]:
     """Oldest-first snapshots along the current MAIN ancestry — the
-    format's own refs-aware walk (``sessionless_main_lineage``:
-    ``refs['main']`` from ``_refs.json`` when present, manifest tail
-    otherwise; exact ``_backfill_parents`` recovery for pre-lineage
-    entries).  Lazy format import: this function runs only on the
+    format's own ref-following walk (``sessionless_main_lineage``).
+    Lazy format import: this function runs only on the
     driver-side DataSource worker (``latestOffset``/``partitions``/
     ``schema``) — the same place the sink's ``commit()`` already imports
     the format — so the module's no-format-imports constraint, which
@@ -93,10 +79,12 @@ def _main_lineage(path: str) -> list[dict]:
     the undone lineage — the exact divergences from the driver loop
     (``stream_table_changes`` → ``main_lineage``) this facade must not
     have."""
-    _load_manifest(path)  # keep the not-a-snapshot-table error contract
     from ..formats.snapshot_parquet import sessionless_main_lineage
 
-    return sessionless_main_lineage(path)
+    lineage = sessionless_main_lineage(path)
+    if not lineage:
+        raise FileNotFoundError(f"not a snapshot table: {path}")
+    return lineage
 
 
 def _append_delta_size(s: dict, by_id: dict) -> tuple[int, int]:
@@ -525,13 +513,14 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
     batchId)`` — which Spark runs once per epoch on the driver-side
     DataSource worker, where no SparkSession exists — performs the pure-
     metadata append (``commit_prewritten_append``: footer bounds, parent
-    stats carry-forward, atomic manifest rename) stamped with the
-    ``(query, batch)`` ledger entry, so a replayed epoch no-ops against
-    ``prewritten_batch_committed`` — the same idempotent-writer contract
-    as the foreachBatch sinks.  ``abort()`` deletes the staged files.
+    stats carry-forward, one compare-and-swap of the table's versioned
+    metadata file) stamped with the ``(query, batch)`` ledger entry, so a
+    replayed epoch no-ops against ``batch_committed`` — the same
+    idempotent-writer contract as the foreachBatch sinks.  ``abort()``
+    deletes the staged files.
 
-    Options: ``path`` (target table root; must exist — ``create()`` it,
-    possibly empty-schema'd, before starting the stream), ``queryName``
+    Options: ``path`` (target table root; the first non-empty epoch
+    creates the table when it has no commit yet), ``queryName``
     (ledger scope; REQUIRED so two different streams never collide),
     ``runId`` (optional ledger run scope — pass a fresh id per
     checkpoint lineage, exactly like the foreachBatch sinks derive one
@@ -576,18 +565,10 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
         # is pickled to executors — the same place commit() already
         # imports the format): an existing table's head spec governs; a
         # yet-to-be-created table takes .option("partitionBy", "c1,c2").
-        from ..formats.snapshot_parquet import parse_partition_field
+        from ..formats.snapshot_parquet import TableMetadata, parse_partition_field
 
-        spec: list[str] | None = None
-        head = None
-        if os.path.exists(os.path.join(self.path, MANIFEST)):
-            from ..formats.snapshot_parquet import (
-                _sessionless_head,
-                _sessionless_load,
-            )
-
-            head = _sessionless_head(self.path, _sessionless_load(self.path))
-            spec = (head or {}).get("partition_by")
+        head = TableMetadata.load(self.path).head()
+        spec = head.partition_by if head else None
         opt_spec = [
             c.strip() for c in (options.get("partitionby") or "").split(",") if c.strip()
         ]
@@ -691,11 +672,11 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         import shutil
-        import uuid
 
         from ..formats.snapshot_parquet import (
+            SnapshotParquetTable,
+            TableMetadata,
             commit_prewritten_append,
-            prewritten_batch_committed,
         )
 
         # (abs file, path it keeps under the snapshot's data dir): tasks
@@ -707,14 +688,9 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
             if m is not None
             for f in m.files
         ]
-        mf = os.path.join(self.path, MANIFEST)
-        if not os.path.exists(mf):  # CREATE-on-first-commit (standard sink UX)
-            os.makedirs(self.path, exist_ok=True)
-            tmp = mf + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                fh.write("[]")
-            os.replace(tmp, mf)
-        if prewritten_batch_committed(self.path, self.query_name, batchId, self.run_id):
+        if SnapshotParquetTable(None, self.path).batch_committed(
+            self.query_name, batchId, self.run_id
+        ):
             for f, _rel in files:  # replayed epoch: drop the re-staged files
                 if os.path.exists(f):
                     os.remove(f)
@@ -722,23 +698,24 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
             return
         if not files:
             return  # nothing to commit for an empty batch
-        # promote the staged files into this snapshot's data dir.
-        # NO exist_ok: a crash between these moves and the manifest append
-        # leaks the dir, and the replayed epoch recomputes the SAME sid —
+        # promote the staged files into this snapshot's data dir, named
+        # from the same metadata version the commit publishes against (a
+        # table with no commit yet is created by this first commit).
+        # NO exist_ok: a crash between these moves and the publish leaks
+        # the dir, and the replayed epoch recomputes the SAME sid —
         # merging into the leaked dir would silently double every row of
         # the crashed attempt inside one snapshot.  Failing loudly matches
         # the format's mode("errorifexists") write contract; recovery is
         # remove_orphan_files (which reclaims unreferenced data-snap-*
         # dirs), then the replay commits clean.
-        raw_tail = _load_manifest(self.path)
-        sid = (raw_tail[-1]["snapshot_id"] + 1) if raw_tail else 1
-        data_dir = os.path.join(self.path, f"data-snap-{sid:06d}")
+        meta = TableMetadata.load(self.path)
+        data_dir = os.path.join(self.path, f"data-snap-{meta.next_snapshot_id():06d}")
         try:
             os.makedirs(data_dir)
         except FileExistsError:
             raise RuntimeError(
                 f"data dir {data_dir} already exists — a previous epoch "
-                "crashed between staging and its manifest commit; run "
+                "crashed between staging and its metadata commit; run "
                 "remove_orphan_files() on the table, then restart the stream"
             ) from None
         for f, rel in files:
@@ -759,6 +736,7 @@ class SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
             self._schema.json(),
             commit_props=props,
             partition_by=self.partition_by,
+            base=meta,
         )
 
     def abort(self, messages, batchId: int) -> None:

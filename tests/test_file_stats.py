@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
 from local_llm_iceberg_cdw_spark.catalog import load_table
-from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
+from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable, TableMetadata
 
 
 def _mk(spark, tmp_path, rows, name="t"):
@@ -85,10 +85,10 @@ def test_plan_files_skips_disjoint_ranges(spark, tmp_path):
 def test_plan_files_keeps_files_without_recorded_stats(spark, tmp_path):
     t = SnapshotParquetTable(spark, str(tmp_path / "nostats"))
     t.create(spark.createDataFrame([(i,) for i in range(5)], "k int"))
-    # simulate a pre-feature manifest: strip the stats and re-commit
-    snaps = t._load()
-    snaps[-1].file_stats = None
-    t._commit(snaps)
+    # simulate a pre-feature snapshot: strip the stats and re-publish
+    meta = t._meta()
+    meta.snapshots[-1].file_stats = None
+    meta.publish(meta.snapshots, meta.refs)
     kept, total = t.plan_files([("k", ">", 10**9)])
     assert kept == total and len(total) >= 1
 
@@ -282,6 +282,7 @@ def test_append_carries_parent_stats_forward(spark, tmp_path):
     t.append(spark.createDataFrame([(2,)], "k int"))
     snap = t._load()[-1]
     assert set(snap.file_stats) == set(snap.data_dirs)
-    # manifest stays valid JSON with the new field
-    with open(os.path.join(t.path, "_snapshots.json")) as fh:
-        assert "file_stats" in json.load(fh)[-1]
+    # the published metadata file stays valid JSON with the new field
+    meta = t._meta()
+    with open(TableMetadata.file(t.path, meta.version)) as fh:
+        assert "file_stats" in json.load(fh)["snapshots"][-1]

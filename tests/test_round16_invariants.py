@@ -134,7 +134,7 @@ def test_time_transform_projection_is_conservative_at_boundaries(spark, tmp_path
     # (inclusive projection is conservative at granule boundaries) …
     field = parse_partition_field("days(ts)")
     assert t._partition_values_may_match(
-        [field], {"ts_day": "2024-01-03"}, [("ts", "<", dt.datetime(2024, 1, 3))], t._snapshot_for(None, None)
+        [field], {"ts_day": "2024-01-03"}, [("ts", "<", dt.datetime(2024, 1, 3))], t._meta().snapshot_for(None, None)
     )
     # … and the FILE-BOUNDS lever then disproves it exactly (the Jan 3
     # file's min ts is not < midnight), so the plan reads two files;

@@ -173,7 +173,7 @@ def test_bucket_literal_projection_keys_on_param(spark, tmp_path):
         spark.createDataFrame([(i,) for i in range(8)], "id long"),
         partition_by=["bucket(16, id)"],
     )
-    snap = t._snapshot_for(None, None)
+    snap = t._meta().snapshot_for(None, None)
 
     def expected(n, v):
         return (
@@ -388,7 +388,6 @@ def test_commit_prewritten_append_primitives(spark, tmp_path):
 
     from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import (
         commit_prewritten_append,
-        prewritten_batch_committed,
     )
 
     t = SnapshotParquetTable(spark, str(tmp_path / "t"))
@@ -405,9 +404,10 @@ def test_commit_prewritten_append_primitives(spark, tmp_path):
     assert sid == 2
     assert sorted(r.id for r in t.read().collect()) == [1, 5, 6]
     # ledger: visible both sessionless and through the table class
-    assert prewritten_batch_committed(str(tmp_path / "t"), "q1", 0)
+    sessionless = SnapshotParquetTable(None, str(tmp_path / "t"))
+    assert sessionless.batch_committed("q1", 0)
     assert t.batch_committed("q1", 0)
-    assert not prewritten_batch_committed(str(tmp_path / "t"), "q1", 1)
+    assert not sessionless.batch_committed("q1", 1)
     # footer bounds recorded: the stats planner prunes sink-written files
     kept, total = t.plan_files([("id", "=", 5)])
     assert len(kept) == 1 and len(total) >= 2 and kept[0].startswith(d1)

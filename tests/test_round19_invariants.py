@@ -420,8 +420,9 @@ def test_commit_prewritten_append_detects_concurrent_rollback(
     spark, tmp_path, monkeypatch
 ):
     """A rollback_to landing between the sessionless append's staging and
-    its publish moves refs['main'] WITHOUT appending a manifest entry —
-    the tail compare alone misses it; the refs byte-compare must not."""
+    its publish moves refs['main'] WITHOUT adding a snapshot — it still
+    publishes a new metadata version, so the append's compare-and-swap
+    must fail."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -448,7 +449,7 @@ def test_commit_prewritten_append_detects_concurrent_rollback(
     monkeypatch.setattr(
         SnapshotParquetTable, "_collect_file_stats", staticmethod(racing_stats)
     )
-    with pytest.raises(RuntimeError, match="concurrent ref update"):
+    with pytest.raises(RuntimeError, match="concurrent commit"):
         sp.commit_prewritten_append(t.path, d, schema_json)
     monkeypatch.undo()
 

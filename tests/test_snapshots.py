@@ -15,13 +15,9 @@ def telco_ns(spark, tmp_path_factory):
     """Telco warehouse with the reference's two-batch load history."""
     ns = Namespace(spark, str(tmp_path_factory.mktemp("wh")), "telco")
     initial = generate_initial(spark)
+    # timestamps are driver-controlled per commit for deterministic travel
     for name, df in initial.items():
-        ns.table(name).create(df)
-    # timestamps are driver-controlled per append for deterministic travel
-    t = ns.table("customers")
-    snaps = t._load()
-    snaps[0].timestamp_ms = 1_000
-    t._commit(snaps)
+        ns.table(name).create(df, timestamp_ms=1_000 if name == "customers" else None)
     max_ids = {
         "customers": 200,
         "subscriptions": 200,
@@ -88,6 +84,18 @@ def test_expire_snapshots(spark, tmp_path):
     assert removed >= 1
     assert t.read().count() == 15  # current state untouched
     assert len(t._load()) == 1
+
+
+@pytest.mark.parametrize("keep_last", [0, -1])
+def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path, keep_last):
+    """``snaps[-0:]`` is the whole list and a negative slice keeps the
+    oldest snapshots, so both would expire the wrong set; refuse them."""
+    t = Namespace(spark, str(tmp_path), "exp").table("tiny")
+    t.create(spark.range(3))
+    t.append(spark.range(2))
+    with pytest.raises(ValueError, match="keep_last"):
+        t.expire_snapshots(keep_last=keep_last)
+    assert len(t._load()) == 2 and t.read().count() == 5
 
 
 def test_drop_and_recreate(spark, tmp_path):
@@ -455,60 +463,19 @@ def test_files_metadata_table(spark, tmp_path):
     assert {r.data_dir for r in v1} < {r.data_dir for r in cur}
 
 
-# -- _backfill_parents: lineage recovery for pre-lineage manifests ----------
-#
-# These fixtures build a lineage-bearing table, record the true parents,
-# then strip parent_snapshot_id from the manifest (simulating a manifest
-# written before lineage existed) and assert _load()'s recovery.
-
-
-def _true_parents(t):
+def _parents(t):
     return {s.snapshot_id: s.parent_snapshot_id for s in t._load()}
 
 
-def _strip_parents(t, drop_fork_info=False):
-    import json as _json
-    import os as _os
-
-    with open(t._manifest_path()) as f:
-        raw = _json.load(f)
-    for s in raw:
-        s.pop("parent_snapshot_id", None)
-    with open(t._manifest_path(), "w") as f:
-        _json.dump(raw, f)
-    if drop_fork_info and _os.path.exists(t._refs_path()):
-        with open(t._refs_path()) as f:
-            refs = _json.load(f)
-        for r in refs.values():
-            r.pop("fork_snapshot_id", None)
-        with open(t._refs_path(), "w") as f:
-            _json.dump(refs, f)
-
-
-def test_backfill_linear_chain(spark, tmp_path):
-    """(a) linear main-only history: recovered parents are exact for every
-    operation kind (append via data_dirs prefix, non-append via the
-    previous entry, which is exact on a linear table)."""
+def test_lineage_with_branch_commits_between_main_commits(spark, tmp_path):
+    """Every commit records its parent, whatever its verb, and main's
+    lineage skips branch commits that land between main commits: main
+    and the branch each read their own chain, main TIMESTAMP AS OF
+    between the branch commit and the next main commit sees main's
+    state, and history marks only main's lineage as current."""
     from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
 
-    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1,), (2,)], "id long"))
-    t.append(spark.createDataFrame([(3,)], "id long"))
-    t.delete_where("id = 1")
-    t.append(spark.createDataFrame([(4,)], "id long"))
-    t.compact(target_file_count=1)
-    truth = _true_parents(t)
-    assert truth == {1: None, 2: 1, 3: 2, 4: 3, 5: 4}
-    _strip_parents(t)
-    assert _true_parents(t) == truth
-
-
-def test_backfill_interleaved_branch_appends(spark, tmp_path):
-    """(b) branch appends interleaved with main appends: every append is
-    recovered EXACTLY via the data_dirs prefix match, so main's lineage
-    skips the branch commits and the branch reads its own chain."""
-    from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
-
+    ids = lambda df: sorted(r.id for r in df.collect())  # noqa: E731
     t = SnapshotParquetTable(spark, str(tmp_path / "t"))
     t.create(spark.createDataFrame([(1,)], "id long"))          # s1 main
     t.append(spark.createDataFrame([(2,)], "id long"))          # s2 main
@@ -517,83 +484,24 @@ def test_backfill_interleaved_branch_appends(spark, tmp_path):
     t.append(spark.createDataFrame([(3,)], "id long"))          # s4 main
     t.append(spark.createDataFrame([(91,)], "id long"), branch="exp")  # s5
     t.append(spark.createDataFrame([(4,)], "id long"))          # s6 main
-    truth = _true_parents(t)
-    assert truth == {1: None, 2: 1, 3: 2, 4: 2, 5: 3, 6: 4}
-    _strip_parents(t, drop_fork_info=True)  # appends need no fork info
-    assert _true_parents(t) == truth
-    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3, 4]
-    assert sorted(r.id for r in t.read(ref="exp").collect()) == [1, 2, 90, 91]
+    t.compact(target_file_count=1)                              # s7 main
+    assert _parents(t) == {1: None, 2: 1, 3: 2, 4: 2, 5: 3, 6: 4, 7: 6}
+    assert ids(t.read()) == [1, 2, 3, 4]
+    assert ids(t.read(ref="exp")) == [1, 2, 90, 91]
 
-
-def test_backfill_non_append_after_branch_fork_exact_with_fork_info(spark, tmp_path):
-    """(c) the ADVICE shape — [append, delete, append, branch-append,
-    delete]: the branch walk passes through the fork into main history, so
-    whole-walk exclusion would chain s5 to s1.  With fork_snapshot_id in
-    the refs file (recorded at creation), recovery is exact: s5.parent=s3,
-    and main TIMESTAMP AS OF between s3 and s5 sees s3's state."""
-    from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
-
-    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1,)], "id long"))                    # s1
-    t.delete_where("id = 1")                                              # s2
-    t.append(spark.createDataFrame([(3,)], "id long"), timestamp_ms=3_000)  # s3
-    t.create_branch("exp")                                                # fork @ s3
-    t.append(spark.createDataFrame([(99,)], "id long"), branch="exp", timestamp_ms=4_000)  # s4
-    t.delete_where("id < 0")                                              # s5 main no-op delete
-    truth = _true_parents(t)
-    assert truth == {1: None, 2: 1, 3: 2, 4: 3, 5: 3}
-    _strip_parents(t)
-    assert _true_parents(t) == truth
-    # main time travel between s3 and s5 must see s3's rows, not s1's
-    # emptied state and not the branch's 99
-    assert sorted(r.id for r in t.read(as_of_timestamp_ms=4_500).collect()) == [3]
-    hist = {r.snapshot_id: r.is_current_ancestor for r in t.history().collect()}
-    assert hist == {1: True, 2: True, 3: True, 4: False, 5: True}
-
-
-def test_backfill_non_append_after_branch_fork_legacy_conservative(spark, tmp_path):
-    """(c') same shape WITHOUT fork info (legacy refs): the append-run rule
-    cannot tell whether s3 is the fork (main append) or a second branch
-    append — both histories write identical bytes — so it excludes the
-    whole append run {s4, s3} and recovers s5.parent=s2: conservative
-    (an older MAIN snapshot), never the branch commit s4, never the
-    whole-walk bug's s1."""
-    from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
-
-    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1,)], "id long"))                    # s1
-    t.delete_where("id = 1")                                              # s2
-    t.append(spark.createDataFrame([(3,)], "id long"))                    # s3
-    t.create_branch("exp")                                                # fork @ s3
-    t.append(spark.createDataFrame([(99,)], "id long"), branch="exp")     # s4
-    t.delete_where("id < 0")                                              # s5
-    _strip_parents(t, drop_fork_info=True)
-    parents = _true_parents(t)
-    assert parents[5] == 2  # conservative main parent; the bug gave 1
-    assert parents[5] != 4  # branch rows never leak into main ancestry
-    # the walk below a non-append fork IS shared history and is not excluded
     t2 = SnapshotParquetTable(spark, str(tmp_path / "t2"))
-    t2.create(spark.createDataFrame([(1,)], "id long"))                   # s1
-    t2.delete_where("id = 1")                                             # s2 (fork)
-    t2.create_branch("exp")
-    t2.append(spark.createDataFrame([(99,)], "id long"), branch="exp")    # s3
-    t2.delete_where("id < 0")                                             # s4 main
-    _strip_parents(t2, drop_fork_info=True)
-    assert _true_parents(t2)[4] == 2  # exact: stops at the non-append fork
-
-
-def test_backfill_tag_excludes_nothing(spark, tmp_path):
-    """A tag is a pointer at existing (main) history, not a lineage owner:
-    its walk must not push a non-append's recovered parent off main."""
-    from local_llm_iceberg_cdw_spark.formats.snapshot_parquet import SnapshotParquetTable
-
-    t = SnapshotParquetTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1,)], "id long"))   # s1
-    t.append(spark.createDataFrame([(2,)], "id long"))   # s2
-    t.create_tag("release")                              # pin @ s2
-    t.delete_where("id = 1")                             # s3
-    _strip_parents(t, drop_fork_info=True)
-    assert _true_parents(t) == {1: None, 2: 1, 3: 2}
+    t2.create(spark.createDataFrame([(1,)], "id long"))                    # s1
+    t2.delete_where("id = 1")                                              # s2
+    t2.append(spark.createDataFrame([(3,)], "id long"), timestamp_ms=3_000)  # s3
+    t2.create_branch("exp")                                                # fork @ s3
+    t2.append(spark.createDataFrame([(99,)], "id long"), branch="exp", timestamp_ms=4_000)  # s4
+    t2.delete_where("id < 0")                                              # s5 main no-op delete
+    assert _parents(t2) == {1: None, 2: 1, 3: 2, 4: 3, 5: 3}
+    # main time travel between s3 and s5 sees s3's rows, not s1's emptied
+    # state and not the branch's 99
+    assert ids(t2.read(as_of_timestamp_ms=4_500)) == [3]
+    hist = {r.snapshot_id: r.is_current_ancestor for r in t2.history().collect()}
+    assert hist == {1: True, 2: True, 3: True, 4: False, 5: True}
 
 
 def test_rollback_moves_main_without_deleting_data(spark, tmp_path):

@@ -46,10 +46,7 @@ def test_bind_time_travel_resolves_snapshot_tables(spark, tmp_path):
     from local_llm_iceberg_cdw_spark.plans.sql import bind_time_travel, execute_sql
 
     t = SnapshotParquetTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1,)], "k long"))
-    snaps = t._load()
-    snaps[0].timestamp_ms = 1_000
-    t._commit(snaps)
+    t.create(spark.createDataFrame([(1,)], "k long"), timestamp_ms=1_000)
     t.append(spark.createDataFrame([(2,)], "k long"), timestamp_ms=2_000)
 
     bound = bind_time_travel(
